@@ -18,7 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..parser.api import UTF8_ERROR, parse_document, tree_to_json
+from ..operators.parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES
+from ..parser.api import UTF8_ERROR, _decode, parse_document, tree_to_json
 from ..parser.extract import extract_all, extract_text_v2
 from ..parser.treebuilder import ParseBudgetExceeded
 
@@ -27,9 +28,10 @@ def _doc_or_none(html):
     if html is None:
         return None
     try:
-        if isinstance(html, (bytes, bytearray, memoryview)):
-            html = bytes(html).decode("utf-8", errors="strict")
-        return parse_document(html, max_nodes=1_000_000, max_depth=512).doc
+        return parse_document(
+            _decode(html), max_nodes=DEFAULT_MAX_NODES,
+            max_depth=DEFAULT_MAX_DEPTH,
+        ).doc
     except (UnicodeDecodeError, ParseBudgetExceeded):
         # ONLY the contract's row-level error paths null out; a genuine
         # parser defect must propagate, not silently become NULL
@@ -71,8 +73,7 @@ def _udf_parse_error(html):
         if h is None:
             return None
         try:
-            if isinstance(h, (bytes, bytearray, memoryview)):
-                bytes(h).decode("utf-8", errors="strict")
+            _decode(h)
             return None
         except UnicodeDecodeError:
             return UTF8_ERROR
@@ -98,17 +99,19 @@ def _udf_pdf_text(payload):
 
 def _udf_fragment_json(html):
     """Scalar §13.4 fragment parse (div context) → ["#frag",…] JSON;
-    NULL on invalid UTF-8 (same typed-error contract as h5_tree_json)."""
+    NULL on invalid UTF-8 or an exceeded parse budget (same typed-error
+    contract as h5_tree_json)."""
     from ..parser.api import fragment_to_json, parse_fragment
 
     def frag(h):
         if h is None:
             return None
         try:
-            if isinstance(h, (bytes, bytearray, memoryview)):
-                h = bytes(h).decode("utf-8", errors="strict")
-            return fragment_to_json(parse_fragment(h, "div"))
-        except UnicodeDecodeError:
+            return fragment_to_json(parse_fragment(
+                _decode(h), "div", max_nodes=DEFAULT_MAX_NODES,
+                max_depth=DEFAULT_MAX_DEPTH,
+            ))
+        except (UnicodeDecodeError, ParseBudgetExceeded):
             return None
 
     return html.map(frag)

@@ -5,10 +5,10 @@ Web-corpus curation increasingly stores extracted pages as Markdown
 reference's tuple tree (``lib/html5ever.ex:40`` — the thing users walk
 to re-render content) into CommonMark-flavored text as a first-class
 Spark surface. Like :mod:`operators.select` / :mod:`operators.tables`,
-conversion needs the per-document tree, so it runs row-local inside the
-vectorized Arrow parse stage: the 100 TB plan is ONE narrow mapInArrow
-stage over a 2-column pruned scan — zero shuffle, embarrassingly
-parallel, scales with input splits.
+conversion needs the per-document tree, so :func:`to_markdown` is a
+view on the shared DOM stage (:func:`operators.parse.dom_stage`): the
+100 TB plan is ONE narrow mapInArrow stage over a 2-column pruned scan
+— zero shuffle, embarrassingly parallel, scales with input splits.
 
 Pinned conversion rules (v1 — the gate predicts output byte-for-byte,
 so changes must update the oracle template in lockstep):
@@ -36,15 +36,12 @@ a task failure.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..parser.dom import ELEMENT, HTML_NS, TEXT
-from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES
-from .select import _parse_or_error
+from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES, dom_stage
 
 __all__ = [
     "to_markdown",
@@ -233,39 +230,12 @@ def to_markdown(
     max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → ``(<id_col>, error, markdown)``, one row per page."""
-    id_field = df.schema[id_col].dataType.simpleString()
-
-    schema = pa.schema(
-        [
-            ("id", pa.string() if id_field == "string" else pa.int64()),
-            ("error", pa.string()),
-            ("markdown", pa.string()),
-        ]
+    return dom_stage(
+        df, lambda builder: [(_doc_markdown(builder.doc),)],
+        [("markdown", pa.string())],
+        id_col=id_col, html_col=html_col, id_name=id_col,
+        max_nodes=max_nodes, max_depth=max_depth,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            rows = []
-            for did, html in zip(ids, htmls):
-                doc, err = _parse_or_error(did, html, max_nodes, max_depth)
-                rows.append(
-                    {
-                        "id": did,
-                        "error": err,
-                        "markdown": None if doc is None else _doc_markdown(doc),
-                    }
-                )
-            yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    pruned = df.select(
-        F.col(id_col).alias("id"), F.col(html_col).alias("html")
-    )
-    out_type = "string" if id_field == "string" else "bigint"
-    return pruned.mapInArrow(
-        fn, f"id {out_type}, error string, markdown string"
-    ).withColumnRenamed("id", id_col)
 
 
 # ---------------------------------------------------------------------------

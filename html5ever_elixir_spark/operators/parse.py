@@ -1,28 +1,35 @@
 """HTML parse + extract operators — the Spark mapping of the reference's
-four entry points (``lib/html5ever.ex:40-129``).
+four entry points (``lib/html5ever.ex:40-129``) — and :func:`dom_stage`,
+the one Python stage every parse-family operator runs in.
 
 Execution model: one ``mapInArrow`` call per Arrow batch of documents —
 zero per-row Python dispatch (the analog of the reference's one
 dirty-CPU NIF call per document, ``lib.rs:24,:43``; Arrow zero-copy
 replaces the BEAM term-copy avoidance of ``CHANGELOG.md:176-178``).
-Column pruning happens *before* the Python stage: only (url, html) cross
-the JVM→Python boundary, so the parquet scan reads exactly two columns.
+Column pruning happens *before* the Python stage: only (id, html) cross
+the JVM→Python boundary (plus any passthrough columns), so the parquet
+scan reads exactly two columns.
+Each operator (here and in select, tables, markdown) is a *view*: a
+function from one parsed document to its output rows.
 
-Row-level error semantics: invalid UTF-8 yields an ``error`` column
-value (the reference's only error path, ``lib.rs:10-22``) with null
-outputs; the job never fails on malformed input.
+Row-level error semantics: invalid UTF-8 (the reference's only error
+path, ``lib.rs:10-22``) or an exceeded parse budget yields an error row
+with null outputs; the job never fails on malformed input.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from operator import itemgetter
+from typing import Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..parser.api import UTF8_ERROR, flat_rows, parse_document, tree_to_json
-from ..parser.treebuilder import ParseBudgetExceeded
+from ..parser.api import _parse_or_error, tree_to_json
+from ..parser.extract import extract_all
 
 # per-document DOM node cap: ~3 orders of magnitude above the web
 # average (~600 nodes/page, reference lib.rs:32-35) — bounds executor
@@ -31,7 +38,6 @@ DEFAULT_MAX_NODES = 1_000_000
 # open-element-stack cap (browser parity: Blink caps at 512); bounds the
 # O(depth²) scope scans on never-closed-tag bombs
 DEFAULT_MAX_DEPTH = 512
-from ..parser.extract import extract_all
 
 # per-doc metric columns emitted alongside text/title/links — histogram-
 # class queries aggregate these instead of exploding every DOM node
@@ -41,37 +47,110 @@ _METRIC_KEYS = (
     "n_nodes", "n_elements", "n_anchors", "n_text_chars", "max_depth",
     "n_texts", "n_comments", "n_doctypes", "n_pis", "n_documents",
 )
+_metrics = itemgetter(*_METRIC_KEYS)
 
-PARSED_FIELDS = (
-    "url string, error string, text string, title string, "
-    "links array<string>, n_parse_errors bigint, tree_json string, "
-    "markdown string, "
-    + ", ".join(f"{k} bigint" for k in _METRIC_KEYS)
-)
+_PARSED_FIELDS = [
+    ("text", pa.string()),
+    ("title", pa.string()),
+    ("links", pa.list_(pa.string())),
+    ("n_parse_errors", pa.int64()),
+    ("tree_json", pa.string()),
+    ("markdown", pa.string()),
+    *[(k, pa.int64()) for k in _METRIC_KEYS],
+]
 
-NODES_FIELDS = (
-    "url string, node_id bigint, parent_id bigint, children array<bigint>, "
-    "type string, name string, "
-    "attrs array<struct<name:string,value:string>>, "
-    "attrs_map map<string,string>, contents string"
-)
+_NODE_FIELDS = [
+    ("node_id", pa.int64()),
+    ("parent_id", pa.int64()),
+    ("children", pa.list_(pa.int64())),
+    ("type", pa.string()),
+    ("name", pa.string()),
+    ("attrs", pa.list_(
+        pa.struct([("name", pa.string()), ("value", pa.string())])
+    )),
+    ("attrs_map", pa.map_(pa.string(), pa.string())),
+    ("contents", pa.string()),
+]
 
 
-def _to_text(v) -> str:
-    """UTF-8 gate for binary html (reference lib.rs:27-30)."""
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        return bytes(v).decode("utf-8", errors="strict")
-    return v
+def dom_stage(
+    df: DataFrame,
+    view: Callable,
+    fields: list[tuple[str, pa.DataType]],
+    *,
+    id_col: str,
+    html_col: str,
+    id_name: str,
+    max_nodes: int,
+    max_depth: int,
+    error_row: Callable | None = None,
+    passthrough_cols: tuple[str, ...] = (),
+    sniff: bool = False,
+) -> DataFrame:
+    """pages → one narrow ``mapInArrow`` stage that parses each document
+    once and maps it through ``view``.
 
+    ``df`` is pruned to (``id_col``, ``html_col``, *passthrough_cols*)
+    before the Python stage. ``view(builder)`` returns the document's
+    output rows as tuples matching ``fields`` (``[(name, arrow_type)]``);
+    zero rows is allowed. Output columns: ``id_name`` (the id column's
+    own type), ``error``, the view fields, then the passthrough columns
+    verbatim. A document that fails the decode gate (strict UTF-8, or
+    the WHATWG sniff chain when ``sniff``) or the node/depth budget gets
+    one error row: ``error`` set and every view field null. With
+    ``error_row`` the operator has no ``error`` column and
+    ``error_row(reason)`` supplies that row's view fields instead.
+    Assembly is columnar: each document's rows are transposed into
+    column lists, then one ``from_arrays`` per batch; never per-row
+    dicts."""
+    pruned = df.select(
+        F.col(id_col), F.col(html_col), *[F.col(c) for c in passthrough_cols]
+    )
+    in_fields = pruned.schema.fields
+    with_error = error_row is None
+    out_schema = StructType(
+        [StructField(id_name, in_fields[0].dataType)]
+        + ([StructField("error", StringType())] if with_error else [])
+        + from_arrow_schema(pa.schema(fields)).fields
+        + [StructField(f.name, f.dataType) for f in in_fields[2:]]
+    )
+    names = [f.name for f in out_schema.fields]
+    null_row = (None,) * len(fields)
 
-def _to_text_sniff(v) -> str:
-    """Lenient crawl decode: BOM → meta prescan → UTF-8 → windows-1252
-    (parser/encoding.py). Never raises; str input passes through."""
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        from ..parser.encoding import sniff_decode
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            src: list[int] = []  # input row of each output row
+            errors: list = []
+            cols: list[list] = [[] for _ in fields]
+            for i, html in enumerate(batch.column(1).to_pylist()):
+                builder, err = _parse_or_error(
+                    html, max_nodes, max_depth, sniff
+                )
+                if builder is None:
+                    got = [error_row(err) if error_row else null_row]
+                else:
+                    got = view(builder)
+                src += [i] * len(got)
+                errors += [err] * len(got)
+                # transpose per document: row tuples held for a whole
+                # batch measurably slow the cyclic GC on node-per-row
+                # views
+                for col, vals in zip(cols, zip(*got)):
+                    col.extend(vals)
+            if not src:
+                continue
+            take = pa.array(src, pa.int64())
+            carried = [batch.column(j).take(take)
+                       for j in range(2, batch.num_columns)]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(take)]
+                + ([pa.array(errors, pa.string())] if with_error else [])
+                + [pa.array(c, t) for c, (_, t) in zip(cols, fields)]
+                + carried,
+                names=names,
+            )
 
-        return sniff_decode(bytes(v))[0]
-    return v
+    return pruned.mapInArrow(fn, out_schema)
 
 
 def parse_and_extract(
@@ -103,93 +182,28 @@ def parse_and_extract(
     prescan → UTF-8 attempt → windows-1252 fallback (WHATWG chain,
     parser/encoding.py) — legacy cp1252/latin-1 pages decode instead of
     becoming error rows; output schema is unchanged."""
-    decode = _to_text if encoding == "strict" else _to_text_sniff
+    if with_markdown:
+        # lazy: markdown → parse would cycle at load time
+        from .markdown import _doc_markdown
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if with_markdown:
-            # lazy: markdown → select → parse would cycle at load time
-            from .markdown import _doc_markdown
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            out = {
-                "url": urls,
-                "error": [],
-                "text": [],
-                "title": [],
-                "links": [],
-                "n_parse_errors": [],
-                "tree_json": [],
-                "markdown": [],
-                **{k: [] for k in _METRIC_KEYS},
-            }
-            for html in htmls:
-                try:
-                    text_in = decode(html) if html is not None else ""
-                    builder = parse_document(
-                        text_in, max_nodes=max_nodes, max_depth=max_depth
-                    )
-                except (UnicodeDecodeError, ParseBudgetExceeded) as exc:
-                    out["error"].append(
-                        UTF8_ERROR
-                        if isinstance(exc, UnicodeDecodeError)
-                        else f"parse budget exceeded: {exc}"
-                    )
-                    for k in ("text", "title", "links", "n_parse_errors",
-                              "tree_json", "markdown", *_METRIC_KEYS):
-                        out[k].append(None)
-                    continue
-                doc = builder.doc
-                m = extract_all(doc)  # fused single traversal
-                out["error"].append(None)
-                out["text"].append(m["text"])
-                out["title"].append(m["title"])
-                out["links"].append(m["links"])
-                for k in _METRIC_KEYS:
-                    out[k].append(m[k])
-                out["n_parse_errors"].append(
-                    builder.parse_errors + builder.tokenizer.parse_errors
-                )
-                out["tree_json"].append(tree_to_json(doc) if with_tree_json else None)
-                out["markdown"].append(
-                    _doc_markdown(doc) if with_markdown else None
-                )
-            rb = pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("url", pa.string()),
-                        ("error", pa.string()),
-                        ("text", pa.string()),
-                        ("title", pa.string()),
-                        ("links", pa.list_(pa.string())),
-                        ("n_parse_errors", pa.int64()),
-                        ("tree_json", pa.string()),
-                        ("markdown", pa.string()),
-                        *[(k, pa.int64()) for k in _METRIC_KEYS],
-                    ]
-                ),
-            )
-            for j, name in enumerate(passthrough_cols):
-                rb = rb.append_column(
-                    pa.field(name, batch.schema.field(2 + j).type),
-                    batch.column(2 + j),
-                )
-            yield rb
+    def view(builder):
+        doc = builder.doc
+        m = extract_all(doc)  # fused single traversal
+        return [(
+            m["text"],
+            m["title"],
+            m["links"],
+            builder.parse_errors + builder.tokenizer.parse_errors,
+            tree_to_json(doc) if with_tree_json else None,
+            _doc_markdown(doc) if with_markdown else None,
+            *_metrics(m),
+        )]
 
-    pruned = df.select(
-        F.col(url_col).alias("url"),
-        F.col(html_col).alias("html"),
-        *[F.col(c) for c in passthrough_cols],
+    return dom_stage(
+        df, view, _PARSED_FIELDS, id_col=url_col, html_col=html_col,
+        id_name="url", max_nodes=max_nodes, max_depth=max_depth,
+        passthrough_cols=passthrough_cols, sniff=encoding != "strict",
     )
-    out_fields = PARSED_FIELDS
-    if passthrough_cols:
-        pass_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.select(*passthrough_cols).schema.fields
-        )
-        out_fields = PARSED_FIELDS + ", " + pass_schema
-    return pruned.mapInArrow(fn, out_fields)
 
 
 def flat_parse_nodes(
@@ -209,80 +223,38 @@ def flat_parse_nodes(
     node rows always have ``type IN (document, element, text, comment,
     doctype, pi)``, so filters on those types are unaffected."""
 
-    arrow_schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("node_id", pa.int64()),
-            ("parent_id", pa.int64()),
-            ("children", pa.list_(pa.int64())),
-            ("type", pa.string()),
-            ("name", pa.string()),
-            ("attrs", pa.list_(
-                pa.struct([("name", pa.string()), ("value", pa.string())])
-            )),
-            ("attrs_map", pa.map_(pa.string(), pa.string())),
-            ("contents", pa.string()),
-        ]
+    def view(builder):
+        out = []
+        stack = [builder.doc]
+        while stack:
+            node = stack.pop()
+            if node.type == "element":
+                attrs = [(n, v) for n, v in node.attrs]
+                am: dict = {}
+                for nk, v in node.attrs:
+                    if nk not in am:
+                        am[nk] = v
+                aml = list(am.items())
+            else:
+                attrs = None
+                aml = None
+            out.append((
+                node.id,
+                node.parent.id if node.parent is not None else None,
+                [c.id for c in node.children],
+                node.type,
+                node.name,
+                attrs,
+                aml,
+                node.contents,
+            ))
+            if node.children:
+                stack.extend(reversed(node.children))
+        return out
+
+    return dom_stage(
+        df, view, _NODE_FIELDS, id_col=url_col, html_col=html_col,
+        id_name="url", max_nodes=max_nodes, max_depth=max_depth,
+        error_row=lambda err: (None, None, None, "error", None, None, None,
+                               err),
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # r9: columnar assembly — building 9 column lists and one
-        # from_pydict is ~4x faster than per-node row dicts through
-        # from_pylist (measured 0.27s -> 0.06s per 512-doc batch);
-        # values identical (same DFS, same first-wins attrs_map)
-        names = ("url", "node_id", "parent_id", "children", "type",
-                 "name", "attrs", "attrs_map", "contents")
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            cols: dict[str, list] = {k: [] for k in names}
-            (c_url, c_id, c_pid, c_ch, c_ty, c_nm, c_at, c_am,
-             c_ct) = (cols[k].append for k in names)
-            n_rows = 0
-            for url, html in zip(urls, htmls):
-                try:
-                    text_in = _to_text(html) if html is not None else ""
-                    doc = parse_document(
-                        text_in, max_nodes=max_nodes, max_depth=max_depth
-                    ).doc
-                except (UnicodeDecodeError, ParseBudgetExceeded) as exc:
-                    c_url(url); c_id(None); c_pid(None); c_ch(None)
-                    c_ty("error"); c_nm(None); c_at(None); c_am(None)
-                    c_ct(
-                        UTF8_ERROR
-                        if isinstance(exc, UnicodeDecodeError)
-                        else f"parse budget exceeded: {exc}"
-                    )
-                    n_rows += 1
-                    continue
-                stack = [doc]
-                while stack:
-                    node = stack.pop()
-                    t = node.type
-                    if t == "element":
-                        attrs = [(n, v) for n, v in node.attrs]
-                        am: dict = {}
-                        for nk, v in node.attrs:
-                            if nk not in am:
-                                am[nk] = v
-                        aml = list(am.items())
-                    else:
-                        attrs = None
-                        aml = None
-                    c_url(url)
-                    c_id(node.id)
-                    c_pid(node.parent.id if node.parent is not None else None)
-                    c_ch([c.id for c in node.children])
-                    c_ty(t)
-                    c_nm(node.name)
-                    c_at(attrs)
-                    c_am(aml)
-                    c_ct(node.contents)
-                    n_rows += 1
-                    if node.children:
-                        stack.extend(reversed(node.children))
-            if n_rows:
-                yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-
-    pruned = df.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
-    return pruned.mapInArrow(fn, NODES_FIELDS)

@@ -1,11 +1,12 @@
 """CSS-selector queries over page corpora.
 
 Spark surface for :mod:`functions.selectors`: selector matching needs
-the per-document tree, so it runs row-local inside the same vectorized
-Arrow stage as parsing (documents are the atomic unit, exactly like
-:func:`operators.parse.parse_and_extract`) — the 100 TB plan is an
-embarrassingly parallel narrow stage over a 2-column pruned scan with
-ZERO shuffle, not a corpus-wide node-table self-join per combinator.
+the per-document tree, so both operators are views on the shared DOM
+stage (:func:`operators.parse.dom_stage`; documents are the atomic
+unit, exactly like :func:`operators.parse.parse_and_extract`) — the
+100 TB plan is an embarrassingly parallel narrow stage over a 2-column
+pruned scan with ZERO shuffle, not a corpus-wide node-table self-join
+per combinator.
 
 Two operators:
 
@@ -25,18 +26,13 @@ failure. Selectors are validated eagerly on the driver
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..parser.api import parse_document
 from ..parser.dom import TEXT
-from ..parser.treebuilder import ParseBudgetExceeded
 from ..functions.selectors import compile_selector, iter_elements, \
     _matches_complex
-from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES, UTF8_ERROR, _to_text
+from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES, dom_stage
 
 __all__ = ["select_nodes", "select_counts"]
 
@@ -54,21 +50,6 @@ def _node_text(node) -> str:
     return "".join(out)
 
 
-def _parse_or_error(url, html, max_nodes, max_depth):
-    try:
-        text_in = _to_text(html) if html is not None else ""
-        return (
-            parse_document(
-                text_in, max_nodes=max_nodes, max_depth=max_depth
-            ).doc,
-            None,
-        )
-    except UnicodeDecodeError:
-        return None, UTF8_ERROR
-    except ParseBudgetExceeded as exc:
-        return None, f"parse budget exceeded: {exc}"
-
-
 def select_nodes(
     df: DataFrame,
     selector: str,
@@ -82,48 +63,18 @@ def select_nodes(
     sentinel row carrying ``error``."""
     compiled = compile_selector(selector)  # driver-side validation
 
-    schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("error", pa.string()),
-            ("node_id", pa.int64()),
-            ("name", pa.string()),
-            ("text", pa.string()),
+    def view(builder):
+        return [
+            (e.id, e.name, _node_text(e))
+            for e in iter_elements(builder.doc)
+            if any(_matches_complex(e, alt) for alt in compiled)
         ]
-    )
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            rows = []
-            for url, html in zip(urls, htmls):
-                doc, err = _parse_or_error(url, html, max_nodes, max_depth)
-                if doc is None:
-                    rows.append(
-                        {"url": url, "error": err, "node_id": None,
-                         "name": None, "text": None}
-                    )
-                    continue
-                for e in iter_elements(doc):
-                    if any(_matches_complex(e, alt) for alt in compiled):
-                        rows.append(
-                            {
-                                "url": url,
-                                "error": None,
-                                "node_id": e.id,
-                                "name": e.name,
-                                "text": _node_text(e),
-                            }
-                        )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    pruned = df.select(F.col(url_col).alias("url"),
-                       F.col(html_col).alias("html"))
-    return pruned.mapInArrow(
-        fn, "url string, error string, node_id bigint, name string, "
-            "text string"
+    return dom_stage(
+        df, view,
+        [("node_id", pa.int64()), ("name", pa.string()), ("text", pa.string())],
+        id_col=url_col, html_col=html_col, id_name="url",
+        max_nodes=max_nodes, max_depth=max_depth,
     )
 
 
@@ -137,36 +88,18 @@ def select_counts(
 ) -> DataFrame:
     """pages → one row per page: ``(url, error, <alias> bigint …)`` —
     match counts for every selector from ONE parse of each document."""
-    aliases = list(selectors)
-    compiled = [(a, compile_selector(selectors[a])) for a in aliases]
+    compiled = [compile_selector(sel) for sel in selectors.values()]
 
-    schema = pa.schema(
-        [("url", pa.string()), ("error", pa.string())]
-        + [(a, pa.int64()) for a in aliases]
+    def view(builder):
+        counts = [0] * len(compiled)
+        for e in iter_elements(builder.doc):
+            for i, alts in enumerate(compiled):
+                if any(_matches_complex(e, alt) for alt in alts):
+                    counts[i] += 1
+        return [tuple(counts)]
+
+    return dom_stage(
+        df, view, [(a, pa.int64()) for a in selectors],
+        id_col=url_col, html_col=html_col, id_name="url",
+        max_nodes=max_nodes, max_depth=max_depth,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            rows = []
-            for url, html in zip(urls, htmls):
-                doc, err = _parse_or_error(url, html, max_nodes, max_depth)
-                row = {"url": url, "error": err}
-                if doc is None:
-                    row.update({a: None for a in aliases})
-                else:
-                    counts = {a: 0 for a in aliases}
-                    for e in iter_elements(doc):
-                        for a, alts in compiled:
-                            if any(_matches_complex(e, alt) for alt in alts):
-                                counts[a] += 1
-                    row.update(counts)
-                rows.append(row)
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    pruned = df.select(F.col(url_col).alias("url"),
-                       F.col(html_col).alias("html"))
-    fields = ", ".join(f"{a} bigint" for a in aliases)
-    return pruned.mapInArrow(fn, f"url string, error string, {fields}")

@@ -2,10 +2,11 @@
 
 The reference's tuple tree (``lib/html5ever.ex:40``) is what users walk
 to scrape tables; this operator does that walk as a first-class Spark
-surface. Per-document tree walking needs the document tree, so it runs
-row-local inside the vectorized Arrow parse stage (same unit-of-work
-argument as :mod:`operators.select`): the 100 TB plan is ONE narrow
-mapInArrow stage over a 2-column pruned scan — zero shuffle, no node
+surface. Per-document tree walking needs the document tree, so both
+operators are views on the shared DOM stage
+(:func:`operators.parse.dom_stage`; same unit-of-work argument as
+:mod:`operators.select`): the 100 TB plan is ONE narrow mapInArrow
+stage over a 2-column pruned scan — zero shuffle, no node
 self-joins — and the output explodes to one row per cell, which is the
 shape downstream relational queries want.
 
@@ -32,16 +33,13 @@ contract, never a task failure.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..functions.selectors import iter_elements
 from ..parser.dom import ELEMENT
-from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES
-from .select import _node_text, _parse_or_error
+from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES, dom_stage
+from .select import _node_text
 
 __all__ = [
     "extract_table_cells",
@@ -107,64 +105,14 @@ def extract_table_cells(
     ``(<id_col>, error, table_idx, row_idx, col_idx, is_header,
     cell_text)``. The id column keeps its input name and type (string
     url or bigint doc_id)."""
-    id_field = df.schema[id_col].dataType.simpleString()
-
-    schema = pa.schema(
-        [
-            ("id", pa.string() if id_field == "string" else pa.int64()),
-            ("error", pa.string()),
-            ("table_idx", pa.int64()),
-            ("row_idx", pa.int64()),
-            ("col_idx", pa.int64()),
-            ("is_header", pa.int64()),
-            ("cell_text", pa.string()),
-        ]
+    return dom_stage(
+        df, lambda builder: _doc_cells(builder.doc),
+        [(c, pa.int64()) for c in ("table_idx", "row_idx", "col_idx",
+                                   "is_header")]
+        + [("cell_text", pa.string())],
+        id_col=id_col, html_col=html_col, id_name=id_col,
+        max_nodes=max_nodes, max_depth=max_depth,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            rows = []
-            for did, html in zip(ids, htmls):
-                doc, err = _parse_or_error(did, html, max_nodes, max_depth)
-                if doc is None:
-                    rows.append(
-                        {
-                            "id": did,
-                            "error": err,
-                            "table_idx": None,
-                            "row_idx": None,
-                            "col_idx": None,
-                            "is_header": None,
-                            "cell_text": None,
-                        }
-                    )
-                    continue
-                for t, r, c, h, txt in _doc_cells(doc):
-                    rows.append(
-                        {
-                            "id": did,
-                            "error": None,
-                            "table_idx": t,
-                            "row_idx": r,
-                            "col_idx": c,
-                            "is_header": h,
-                            "cell_text": txt,
-                        }
-                    )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    pruned = df.select(
-        F.col(id_col).alias("id"), F.col(html_col).alias("html")
-    )
-    out_type = "string" if id_field == "string" else "bigint"
-    return pruned.mapInArrow(
-        fn,
-        f"id {out_type}, error string, table_idx bigint, row_idx bigint, "
-        "col_idx bigint, is_header bigint, cell_text string",
-    ).withColumnRenamed("id", id_col)
 
 
 def _span_attr(cell, name: str, cap: int) -> int:
@@ -246,74 +194,15 @@ def extract_table_grid(
     plain child-index (:func:`extract_table_cells` semantics) so one
     output covers both numbering schemes. Same plan shape: one narrow
     mapInArrow over a 2-column pruned scan, zero shuffle."""
-    id_field = df.schema[id_col].dataType.simpleString()
-
-    schema = pa.schema(
-        [
-            ("id", pa.string() if id_field == "string" else pa.int64()),
-            ("error", pa.string()),
-            ("table_idx", pa.int64()),
-            ("grid_row", pa.int64()),
-            ("col_idx", pa.int64()),
-            ("grid_col", pa.int64()),
-            ("rowspan", pa.int64()),
-            ("colspan", pa.int64()),
-            ("is_header", pa.int64()),
-            ("cell_text", pa.string()),
-        ]
+    return dom_stage(
+        df, lambda builder: _doc_grid_cells(builder.doc),
+        [(c, pa.int64()) for c in ("table_idx", "grid_row", "col_idx",
+                                   "grid_col", "rowspan", "colspan",
+                                   "is_header")]
+        + [("cell_text", pa.string())],
+        id_col=id_col, html_col=html_col, id_name=id_col,
+        max_nodes=max_nodes, max_depth=max_depth,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            rows = []
-            for did, html in zip(ids, htmls):
-                doc, err = _parse_or_error(did, html, max_nodes, max_depth)
-                if doc is None:
-                    rows.append(
-                        {
-                            "id": did,
-                            "error": err,
-                            "table_idx": None,
-                            "grid_row": None,
-                            "col_idx": None,
-                            "grid_col": None,
-                            "rowspan": None,
-                            "colspan": None,
-                            "is_header": None,
-                            "cell_text": None,
-                        }
-                    )
-                    continue
-                for t, r, ci, c, rs, cs, h, txt in _doc_grid_cells(doc):
-                    rows.append(
-                        {
-                            "id": did,
-                            "error": None,
-                            "table_idx": t,
-                            "grid_row": r,
-                            "col_idx": ci,
-                            "grid_col": c,
-                            "rowspan": rs,
-                            "colspan": cs,
-                            "is_header": h,
-                            "cell_text": txt,
-                        }
-                    )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    pruned = df.select(
-        F.col(id_col).alias("id"), F.col(html_col).alias("html")
-    )
-    out_type = "string" if id_field == "string" else "bigint"
-    return pruned.mapInArrow(
-        fn,
-        f"id {out_type}, error string, table_idx bigint, grid_row bigint, "
-        "col_idx bigint, grid_col bigint, rowspan bigint, "
-        "colspan bigint, is_header bigint, cell_text string",
-    ).withColumnRenamed("id", id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -13,8 +13,9 @@ from __future__ import annotations
 import json
 
 from .dom import COMMENT, DOCTYPE, DOCUMENT, ELEMENT, PI, TEXT, Node
+from .encoding import sniff_decode
 from .tokenizer import Tokenizer
-from .treebuilder import TreeBuilder
+from .treebuilder import ParseBudgetExceeded, TreeBuilder
 
 # Reference error string: native/html5ever_nif/src/lib.rs:10-12
 UTF8_ERROR = "cannot transform bytes from binary to a valid UTF8 string"
@@ -97,12 +98,36 @@ def parse_fragment(
     return builder
 
 
-def _decode(data) -> str:
-    """UTF-8 gate (reference lib.rs:27-30): bytes must be valid UTF-8;
-    str input is accepted as-is (already decoded)."""
-    if isinstance(data, str):
+def _decode(data, sniff: bool = False) -> str:
+    """The decode gate. Binary input must be valid UTF-8
+    (``UnicodeDecodeError`` otherwise; reference lib.rs:27-30); str
+    input is accepted as-is (already decoded). ``sniff=True`` is the
+    lenient crawl decode instead: BOM → <meta charset> prescan → UTF-8
+    → windows-1252 (parser/encoding.py), which never raises."""
+    if not isinstance(data, (bytes, bytearray, memoryview)):
         return data
-    return data.decode("utf-8", errors="strict")
+    if sniff:
+        return sniff_decode(bytes(data))[0]
+    return bytes(data).decode("utf-8", errors="strict")
+
+
+def _parse_or_error(
+    html,
+    max_nodes: int | None = None,
+    max_depth: int | None = None,
+    sniff: bool = False,
+):
+    """Decode gate + budgeted parse → ``(builder, None)``, or
+    ``(None, reason)`` for the contract's two row-level errors: invalid
+    UTF-8 (``UTF8_ERROR``, reference lib.rs:10-22) and
+    ``ParseBudgetExceeded``. NULL html parses as the empty document."""
+    try:
+        text = _decode(html, sniff) if html is not None else ""
+        return parse_document(text, max_nodes, max_depth), None
+    except UnicodeDecodeError:
+        return None, UTF8_ERROR
+    except ParseBudgetExceeded as exc:
+        return None, f"parse budget exceeded: {exc}"
 
 
 # ---------------------------------------------------------------------------
@@ -155,25 +180,25 @@ def _encode_tuple_tree(doc: Node, attrs_as_maps: bool):
     return result_children[doc.id]
 
 
+def _ok_or_error(html, encode, attrs_as_maps: bool):
+    """``("ok", encode(doc, attrs_as_maps))`` | ``("error", reason)`` —
+    the four entry points differ only in the encoder (reference
+    lib.rs:24-47)."""
+    builder, err = _parse_or_error(html)
+    if builder is None:
+        return ("error", err)
+    return ("ok", encode(builder.doc, attrs_as_maps))
+
+
 def parse(html):
     """HTML → ``("ok", nested_tree)`` | ``("error", reason)``.
     Parity: ``Html5ever.parse/1`` (lib/html5ever.ex:40-42)."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_tuple_tree(builder.doc, False))
+    return _ok_or_error(html, _encode_tuple_tree, False)
 
 
 def parse_attrs_maps(html):
     """Parity: ``Html5ever.parse_with_attributes_as_maps/1``."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_tuple_tree(builder.doc, True))
+    return _ok_or_error(html, _encode_tuple_tree, True)
 
 
 # ---------------------------------------------------------------------------
@@ -230,22 +255,12 @@ def _encode_flat(doc: Node, attrs_as_maps: bool):
 
 def flat_parse(html):
     """Parity: ``Html5ever.flat_parse/1`` (lib/html5ever.ex:117-119)."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_flat(builder.doc, False))
+    return _ok_or_error(html, _encode_flat, False)
 
 
 def flat_parse_attrs_maps(html):
     """Parity: ``Html5ever.flat_parse_with_attributes_as_maps/1``."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_flat(builder.doc, True))
+    return _ok_or_error(html, _encode_flat, True)
 
 
 # ---------------------------------------------------------------------------
@@ -327,37 +342,3 @@ def fragment_to_json(builder: TreeBuilder, attrs_as_maps: bool = False) -> str:
         ["#frag", _json_children(builder.fragment_root, attrs_as_maps)],
         separators=(",", ":"), ensure_ascii=False,
     )
-
-
-def flat_rows(doc: Node):
-    """Flat nodes as row dicts for the Spark ``nodes`` table (one row per
-    node; schema per FIXTURES.md §2). Iterative DFS in id-agnostic
-    document order; ``attrs_map`` is first-occurrence-wins."""
-    rows = []
-    stack = [doc]
-    while stack:
-        node = stack.pop()
-        t = node.type
-        attrs = None
-        attrs_map = None
-        if t == ELEMENT:
-            attrs = [{"name": n, "value": v} for n, v in node.attrs]
-            attrs_map = {}
-            for n, v in node.attrs:
-                if n not in attrs_map:
-                    attrs_map[n] = v
-        rows.append(
-            {
-                "node_id": node.id,
-                "parent_id": node.parent.id if node.parent is not None else None,
-                "children": [c.id for c in node.children],
-                "type": t,
-                "name": node.name,
-                "attrs": attrs,
-                "attrs_map": attrs_map,
-                "contents": node.contents,
-            }
-        )
-        if node.children:
-            stack.extend(reversed(node.children))
-    return rows

@@ -50,7 +50,10 @@ def test_h5_fragment_and_image_sql_udfs(spark):
     register_all(spark)
     df = spark.createDataFrame(
         [(1, "<p>one<p>two", bytearray(encode_jpeg_gray_blocks(b"\x64"))),
-         (2, None, None)],
+         (2, None, None),
+         # never-closed-tag bomb: over the depth budget → NULL, not a
+         # quadratic-time parse
+         (3, "<div>" * 600, None)],
         "id bigint, frag string, img binary",
     )
     df.createOrReplaceTempView("t_udf6")
@@ -61,6 +64,7 @@ def test_h5_fragment_and_image_sql_udfs(spark):
     assert rows[1].fj == '["#frag",[["e","p",[],["one"]],["e","p",[],["two"]]]]'
     assert rows[1].lm == 100.0  # constant 0x64 block
     assert rows[2].fj is None and rows[2].lm is None
+    assert rows[3].fj is None
 
 
 def test_h5_css_count_sql_udf(spark):
