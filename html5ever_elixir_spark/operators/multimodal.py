@@ -1,8 +1,9 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The Spark-side plumbing (schemas, Arrow batch shapes, mapInPandas
-signatures, partitioning) is real and tested. Decode has three tiers:
+The Spark-side plumbing (schemas, Arrow batch shapes, partitioning) is
+real and tested; every row-local operator here is a row function on the
+shared row stage (``operators/stage.py``). Decode has three tiers:
 a REAL pure-Python decoder for uncompressed rasters (P5/P6 PNM and
 24-bit BI_RGB BMP — executes and is tested in this sandbox), PIL for
 everything else when installed, and a deterministic byte-histogram
@@ -15,24 +16,25 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .stage import row_stage
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
     "meta struct<width:int, height:int, mime:string>"
 )
 
-FEATURES_SCHEMA = (
-    "media_id bigint, kind string, n_bytes bigint, sha256 string, "
+FEATURES_FIELDS = [
+    ("kind", pa.string()), ("n_bytes", pa.int64()), ("sha256", pa.string()),
     # double, not float: the media_raster_features driver gate compares
     # feature values against DuckDB float64 arithmetic — float32 would
     # quantize before the shared SQL rounding and hash-mismatch
-    "feature array<double>, decode_error string"
-)
+    ("feature", pa.list_(pa.float64())), ("decode_error", pa.string()),
+]
 
 
 try:  # real decoder when the runtime has PIL; sandbox does not
@@ -391,6 +393,16 @@ def encode_gif(
 _GIF_EXTS = b"\x21\xf9\x04\x00\x00\x00\x00\x00" b"\x21\xfe\x03gif\x00"
 
 
+def _synth_media(docs: DataFrame, text_col: str, id_col: str, rows):
+    """docs(id, text) → (media_id bigint, payload binary): the shared
+    row stage over ``rows(doc_id, text)``, one payload per document."""
+    pruned = docs.select(
+        F.col(id_col).cast("bigint").alias("media_id"),
+        F.col(text_col).alias("text"),
+    )
+    return row_stage(pruned, rows, [("payload", pa.binary())])
+
+
 def docs_to_gifs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -400,32 +412,16 @@ def docs_to_gifs(
     bytes are the character codes. Odd doc_ids get bare GIF87a; even
     ones GIF89a with graphic-control + comment extension blocks, so the
     driver row exercises both version paths and the extension skip.
-    mapInArrow, 2-column pruned, binary out."""
-    import pyarrow as pa
+    A row function on the shared row stage, 2-column pruned, binary
+    out."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            gifs = []
-            for did, t in zip(ids, texts):
-                px = (t or "").encode("utf-8")
-                if did % 2 == 0:
-                    gifs.append(encode_gif(px, len(px), 1, b"89a", _GIF_EXTS))
-                else:
-                    gifs.append(encode_gif(px, len(px), 1, b"87a"))
-            yield pa.RecordBatch.from_pydict(
-                {"media_id": ids, "payload": gifs},
-                schema=pa.schema([
-                    ("media_id", pa.int64()), ("payload", pa.binary()),
-                ]),
-            )
+    def rows(did, t):
+        px = (t or "").encode("utf-8")
+        if did % 2 == 0:
+            return [(encode_gif(px, len(px), 1, b"89a", _GIF_EXTS),)]
+        return [(encode_gif(px, len(px), 1, b"87a"),)]
 
-    pruned = docs.select(
-        F.col(id_col).cast("bigint").alias("media_id"),
-        F.col(text_col).alias("text"),
-    )
-    return pruned.mapInArrow(fn, "media_id bigint, payload binary")
+    return _synth_media(docs, text_col, id_col, rows)
 
 
 def docs_to_webps(
@@ -437,33 +433,15 @@ def docs_to_webps(
     WebP whose decoded BT.601 luma equals the character code exactly
     (r=g=b=v → (299+587+114)/1000 = 1). Even doc_ids route through the
     subtract-green transform (§5.2) so the driver row exercises both
-    the plain-literal and transform-inverse paths. mapInArrow,
-    2-column pruned, binary out."""
-    import pyarrow as pa
+    the plain-literal and transform-inverse paths. A row function on
+    the shared row stage, 2-column pruned, binary out."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            webps = []
-            for did, t in zip(ids, texts):
-                px = (t or "").encode("utf-8")
-                webps.append(
-                    encode_webp_vp8l(px, len(px), 1,
-                                     subtract_green=(did % 2 == 0))
-                )
-            yield pa.RecordBatch.from_pydict(
-                {"media_id": ids, "payload": webps},
-                schema=pa.schema([
-                    ("media_id", pa.int64()), ("payload", pa.binary()),
-                ]),
-            )
+    def rows(did, t):
+        px = (t or "").encode("utf-8")
+        return [(encode_webp_vp8l(px, len(px), 1,
+                                  subtract_green=(did % 2 == 0)),)]
 
-    pruned = docs.select(
-        F.col(id_col).cast("bigint").alias("media_id"),
-        F.col(text_col).alias("text"),
-    )
-    return pruned.mapInArrow(fn, "media_id bigint, payload binary")
+    return _synth_media(docs, text_col, id_col, rows)
 
 
 def _skip_gif_subblocks(payload: bytes, pos: int) -> int:
@@ -2335,29 +2313,9 @@ def docs_to_wavs(
     sample i = (byte_i − 128) · 256 — exactly representable int16, so
     |sample| is SQL-predictable from the text and the driver gate can
     compare INTEGER window sums (no cross-engine float rounding)."""
-    import pyarrow as pa
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            wavs = [
-                make_wav_pcm16([(b - 128) * 256
-                                for b in (t or "").encode("utf-8")])
-                for t in texts
-            ]
-            yield pa.RecordBatch.from_pydict(
-                {"media_id": ids, "payload": wavs},
-                schema=pa.schema([
-                    ("media_id", pa.int64()), ("payload", pa.binary()),
-                ]),
-            )
-
-    pruned = docs.select(
-        F.col(id_col).cast("bigint").alias("media_id"),
-        F.col(text_col).alias("text"),
-    )
-    return pruned.mapInArrow(fn, "media_id bigint, payload binary")
+    return _synth_media(docs, text_col, id_col, lambda _, t: [(
+        make_wav_pcm16([(b - 128) * 256 for b in (t or "").encode("utf-8")]),
+    )])
 
 
 def _pool_features(px: list[int], n_dims: int) -> list[float]:
@@ -2395,9 +2353,10 @@ def _decode_image(payload: bytes, n_dims: int = 8) -> list[float]:
     return _pool_features(list(img.getdata()), n_dims)
 
 
-FRAMES_SCHEMA = (
-    "media_id bigint, frame_idx bigint, n_bytes bigint, frame_sha256 string"
-)
+FRAMES_FIELDS = [
+    ("frame_idx", pa.int64()), ("n_bytes", pa.int64()),
+    ("frame_sha256", pa.string()),
+]
 
 
 def sample_frames(
@@ -2410,34 +2369,23 @@ def sample_frames(
     covers bytes [i*L//n, (i+1)*L//n) (balanced split), emitted as one
     row per frame with its byte count and sha256. For real video this is
     where a decoder picks keyframes; the Spark-side shape — one binary
-    payload in, N typed frame rows out, batch-wise via mapInPandas — is
-    exactly the production plumbing, and the byte-range split keeps the
-    whole operator oracle-checkable without media libraries."""
-    import hashlib as _hashlib
+    payload in, N typed frame rows out, a row function on the shared
+    row stage — is exactly the production plumbing, and the byte-range
+    split keeps the whole operator oracle-checkable without media
+    libraries. A NULL payload yields no frames."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": [], "frame_idx": [], "n_bytes": [],
-                   "frame_sha256": []}
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                data = bytes(payload)
-                ln = len(data)
-                for i in range(n_frames):
-                    lo = i * ln // n_frames
-                    hi = (i + 1) * ln // n_frames
-                    chunk = data[lo:hi]
-                    out["media_id"].append(mid)
-                    out["frame_idx"].append(i)
-                    out["n_bytes"].append(len(chunk))
-                    out["frame_sha256"].append(
-                        _hashlib.sha256(chunk).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def rows(_, data):
+        if data is None:
+            return
+        ln = len(data)
+        for i in range(n_frames):
+            chunk = data[i * ln // n_frames : (i + 1) * ln // n_frames]
+            yield i, len(chunk), hashlib.sha256(chunk).hexdigest()
 
-    pruned = df.select(id_col, payload_col)
-    return pruned.mapInPandas(fn, FRAMES_SCHEMA)
+    pruned = df.select(
+        F.col(id_col).cast("bigint").alias("media_id"), F.col(payload_col)
+    )
+    return row_stage(pruned, rows, FRAMES_FIELDS)
 
 
 def extract_media_features(
@@ -2445,7 +2393,8 @@ def extract_media_features(
 ) -> DataFrame:
     """media(media_id, kind, payload, meta) → per-item features.
 
-    mapInPandas with Arrow batches: payloads stay binary end-to-end
+    A row function on the shared row stage over the pruned
+    (media_id, kind, payload) columns: payloads stay binary end-to-end
     (no base64/utf8 round trip); one Python call per batch.
 
     Default decoding dispatches per ``kind``: audio → pure-Python
@@ -2465,35 +2414,24 @@ def extract_media_features(
                 return _decode_image_stub(payload, n_dims_)
         return _decode_image(payload, n_dims_)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": pdf["payload"].map(
-                    lambda p: len(p) if p is not None else 0
-                ),
-                "sha256": pdf["payload"].map(
-                    lambda p: hashlib.sha256(p).hexdigest() if p is not None else None
-                ),
-            }
-            feats = []
-            errs = []
-            for kind, p in zip(pdf["kind"], pdf["payload"]):
-                try:
-                    if decoder is not None:
-                        feats.append(decoder(p, n_dims))
-                    else:
-                        feats.append(_by_kind(kind, p, n_dims))
-                    errs.append(None)
-                except Exception as e:  # decode failures are row-level
-                    feats.append(None)
-                    errs.append(str(e))
-            out["feature"] = feats
-            out["decode_error"] = errs
-            yield pd.DataFrame(out)
+    def rows(_, item):
+        kind, p = item["kind"], item["payload"]
+        n_bytes = len(p) if p is not None else 0
+        sha = hashlib.sha256(p).hexdigest() if p is not None else None
+        try:
+            if decoder is not None:
+                feat = decoder(p, n_dims)
+            else:
+                feat = _by_kind(kind, p, n_dims)
+        except Exception as e:  # decode failures are row-level
+            return [(kind, n_bytes, sha, None, str(e))]
+        return [(kind, n_bytes, sha, feat, None)]
 
-    return df.mapInPandas(fn, FEATURES_SCHEMA)
+    pruned = df.select(
+        F.col("media_id").cast("bigint").alias("media_id"),
+        F.struct("kind", "payload"),
+    )
+    return row_stage(pruned, rows, FEATURES_FIELDS)
 
 
 # ---------------------------------------------------------------------------
@@ -2542,10 +2480,9 @@ def dhash_from_pixels(
     return hi, lo
 
 
-DHASH_SCHEMA = (
-    "media_id bigint, width bigint, height bigint, "
-    "dhash_hi bigint, dhash_lo bigint, decode_error string"
-)
+DHASH_FIELDS = [
+    (c, pa.int64()) for c in ("width", "height", "dhash_hi", "dhash_lo")
+] + [("decode_error", pa.string())]
 
 
 def image_dhash(
@@ -2561,44 +2498,22 @@ def image_dhash(
     100 TB the decode cost dominates and scales embarrassingly, and the
     8-byte hash (not the image) is all that ever shuffles downstream.
     Decode/size failures are row-level ``decode_error`` rows."""
-    import pyarrow as pa
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            out = {"media_id": ids, "width": [], "height": [],
-                   "dhash_hi": [], "dhash_lo": [], "decode_error": []}
-            for p in payloads:
-                try:
-                    if p is None:
-                        raise ValueError("null payload")
-                    w, h, px = _decode_raster(bytes(p))
-                    hi, lo = dhash_from_pixels(px, w, h, grid_w, grid_h)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["dhash_hi"].append(hi)
-                    out["dhash_lo"].append(lo)
-                    out["decode_error"].append(None)
-                except Exception as e:  # decode failures are row-level
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["dhash_hi"].append(None)
-                    out["dhash_lo"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("media_id", pa.int64()), ("width", pa.int64()),
-                    ("height", pa.int64()), ("dhash_hi", pa.int64()),
-                    ("dhash_lo", pa.int64()), ("decode_error", pa.string()),
-                ]),
-            )
+    def rows(_, p):
+        try:
+            if p is None:
+                raise ValueError("null payload")
+            w, h, px = _decode_raster(p)
+            hi, lo = dhash_from_pixels(px, w, h, grid_w, grid_h)
+        except Exception as e:  # decode failures are row-level
+            return [(None, None, None, None, str(e))]
+        return [(w, h, hi, lo, None)]
 
     pruned = media.select(
-        F.col(id_col).alias("media_id"), F.col(payload_col).alias("payload")
+        F.col(id_col).cast("bigint").alias("media_id"),
+        F.col(payload_col).alias("payload"),
     )
-    return pruned.mapInArrow(fn, DHASH_SCHEMA)
+    return row_stage(pruned, rows, DHASH_FIELDS)
 
 
 def image_dhash_pairs(
@@ -2651,46 +2566,29 @@ def docs_to_dhash_pnms(docs: DataFrame, grid_w: int = 8, grid_h: int = 8):
     so the block-mean path runs for half the corpus, resolution-
     mismatched copies still collide (the property dHash exists for),
     and the oracle stays the same direct byte formula for every doc."""
-    import pyarrow as pa
-
     gw1 = grid_w + 1
     n_px = gw1 * grid_h
     header1 = f"P5 {gw1} {grid_h} 255\n".encode()
     header2 = f"P5 {2 * gw1} {2 * grid_h} 255\n".encode()
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            payloads = []
-            for did, t in zip(ids, texts):
-                vals = bytearray((t or "")[:n_px].ljust(n_px).encode())
-                if did % 11 == 0:
-                    vals[-1] += 1
-                if did % 2:
-                    # r9: 2x pixel doubling via strided slice assignment
-                    # (C speed) instead of a per-pixel generator —
-                    # identical bytes
-                    up = bytearray()
-                    dbl = bytearray(2 * gw1)
-                    for r in range(grid_h):
-                        row = vals[r * gw1 : (r + 1) * gw1]
-                        dbl[0::2] = row
-                        dbl[1::2] = row
-                        up += dbl + dbl
-                    payloads.append(header2 + bytes(up))
-                else:
-                    payloads.append(header1 + bytes(vals))
-            yield pa.RecordBatch.from_pydict(
-                {"media_id": ids, "payload": payloads},
-                schema=pa.schema([
-                    ("media_id", pa.int64()), ("payload", pa.binary()),
-                ]),
-            )
+    def rows(did, t):
+        vals = bytearray((t or "")[:n_px].ljust(n_px).encode())
+        if did % 11 == 0:
+            vals[-1] += 1
+        if not did % 2:
+            return [(header1 + bytes(vals),)]
+        # r9: 2x pixel doubling via strided slice assignment (C speed)
+        # instead of a per-pixel generator — identical bytes
+        up = bytearray()
+        dbl = bytearray(2 * gw1)
+        for r in range(grid_h):
+            row = vals[r * gw1 : (r + 1) * gw1]
+            dbl[0::2] = row
+            dbl[1::2] = row
+            up += dbl + dbl
+        return [(header2 + bytes(up),)]
 
-    return docs.selectExpr("doc_id AS media_id", "text").mapInArrow(
-        fn, "media_id bigint, payload binary"
-    )
+    return _synth_media(docs, "text", "doc_id", rows)
 
 
 def oracle_dhash_sql(

@@ -1,14 +1,15 @@
 """HTML parse + extract operators — the Spark mapping of the reference's
 four entry points (``lib/html5ever.ex:40-129``) — and :func:`dom_stage`,
-the one Python stage every parse-family operator runs in.
+the parse-family row function (decode gate, budget, view) every
+parse-family operator runs through.
 
-Execution model: one ``mapInArrow`` call per Arrow batch of documents —
-zero per-row Python dispatch (the analog of the reference's one
-dirty-CPU NIF call per document, ``lib.rs:24,:43``; Arrow zero-copy
-replaces the BEAM term-copy avoidance of ``CHANGELOG.md:176-178``).
-Column pruning happens *before* the Python stage: only (id, html) cross
-the JVM→Python boundary (plus any passthrough columns), so the parquet
-scan reads exactly two columns.
+Execution model: the shared row stage (``operators/stage.py``), one
+``mapInArrow`` call per Arrow batch of documents — zero per-row Python
+dispatch (the analog of the reference's one dirty-CPU NIF call per
+document, ``lib.rs:24,:43``; Arrow zero-copy replaces the BEAM term-copy
+avoidance of ``CHANGELOG.md:176-178``). Column pruning happens *before*
+the Python stage: only (id, html) cross the JVM→Python boundary (plus
+any passthrough columns), so the parquet scan reads exactly two columns.
 Each operator (here and in select, tables, markdown) is a *view*: a
 function from one parsed document to its output rows.
 
@@ -20,16 +21,15 @@ with null outputs; the job never fails on malformed input.
 from __future__ import annotations
 
 from operator import itemgetter
-from typing import Callable, Iterator
+from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..parser.api import _parse_or_error, tree_to_json
 from ..parser.extract import extract_all
+from .stage import row_stage
 
 # per-document DOM node cap: ~3 orders of magnitude above the web
 # average (~600 nodes/page, reference lib.rs:32-35) — bounds executor
@@ -87,8 +87,9 @@ def dom_stage(
     passthrough_cols: tuple[str, ...] = (),
     sniff: bool = False,
 ) -> DataFrame:
-    """pages → one narrow ``mapInArrow`` stage that parses each document
-    once and maps it through ``view``.
+    """pages → the parse-family row function on the shared row stage
+    (:func:`operators.stage.row_stage`): each document is parsed once
+    and mapped through ``view``.
 
     ``df`` is pruned to (``id_col``, ``html_col``, *passthrough_cols*)
     before the Python stage. ``view(builder)`` returns the document's
@@ -99,58 +100,25 @@ def dom_stage(
     the WHATWG sniff chain when ``sniff``) or the node/depth budget gets
     one error row: ``error`` set and every view field null. With
     ``error_row`` the operator has no ``error`` column and
-    ``error_row(reason)`` supplies that row's view fields instead.
-    Assembly is columnar: each document's rows are transposed into
-    column lists, then one ``from_arrays`` per batch; never per-row
-    dicts."""
+    ``error_row(reason)`` supplies that row's view fields instead."""
     pruned = df.select(
-        F.col(id_col), F.col(html_col), *[F.col(c) for c in passthrough_cols]
+        F.col(id_col).alias(id_name), F.col(html_col),
+        *[F.col(c) for c in passthrough_cols],
     )
-    in_fields = pruned.schema.fields
     with_error = error_row is None
-    out_schema = StructType(
-        [StructField(id_name, in_fields[0].dataType)]
-        + ([StructField("error", StringType())] if with_error else [])
-        + from_arrow_schema(pa.schema(fields)).fields
-        + [StructField(f.name, f.dataType) for f in in_fields[2:]]
-    )
-    names = [f.name for f in out_schema.fields]
-    null_row = (None,) * len(fields)
+    if with_error:
+        null_row = (None,) * len(fields)
+        error_row = lambda err: (err, *null_row)  # noqa: E731
+        fields = [("error", pa.string()), *fields]
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            src: list[int] = []  # input row of each output row
-            errors: list = []
-            cols: list[list] = [[] for _ in fields]
-            for i, html in enumerate(batch.column(1).to_pylist()):
-                builder, err = _parse_or_error(
-                    html, max_nodes, max_depth, sniff
-                )
-                if builder is None:
-                    got = [error_row(err) if error_row else null_row]
-                else:
-                    got = view(builder)
-                src += [i] * len(got)
-                errors += [err] * len(got)
-                # transpose per document: row tuples held for a whole
-                # batch measurably slow the cyclic GC on node-per-row
-                # views
-                for col, vals in zip(cols, zip(*got)):
-                    col.extend(vals)
-            if not src:
-                continue
-            take = pa.array(src, pa.int64())
-            carried = [batch.column(j).take(take)
-                       for j in range(2, batch.num_columns)]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0).take(take)]
-                + ([pa.array(errors, pa.string())] if with_error else [])
-                + [pa.array(c, t) for c, (_, t) in zip(cols, fields)]
-                + carried,
-                names=names,
-            )
+    def rows(_, html):
+        builder, err = _parse_or_error(html, max_nodes, max_depth, sniff)
+        if builder is None:
+            return [error_row(err)]
+        got = view(builder)
+        return [(None, *r) for r in got] if with_error else got
 
-    return pruned.mapInArrow(fn, out_schema)
+    return row_stage(pruned, rows, fields)
 
 
 def parse_and_extract(

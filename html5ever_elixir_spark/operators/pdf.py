@@ -1,66 +1,60 @@
 """PDF text-extraction operators (north-rule "PDF/layout parse" —
 pipeline mandate; not in the HTML-only reference).
 
-Same execution model as the HTML path (``operators/parse.py``): one
-``mapInArrow`` call per Arrow batch, binary payloads end-to-end, 2-column
-pruned input, row-level errors (out-of-scope PDFs become an ``error``
-value, never a job failure).
+Both operators are row functions on the shared row stage
+(``operators/stage.py``), like the HTML path: one ``mapInArrow`` call
+per Arrow batch, binary payloads end-to-end, 2-column pruned input,
+row-level errors (out-of-scope PDFs become an ``error`` value, never a
+job failure).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..parser.pdf import PdfError, extract_pdf_text, make_simple_pdf
-
-PDF_PARSED_FIELDS = (
-    "doc_id bigint, error string, text string, n_pages bigint, n_bytes bigint"
+from ..parser.pdf import (
+    _UCS2_CMAP_NAMES,
+    PdfError,
+    encrypt_pdf_aes,
+    encrypt_pdf_aes256,
+    encrypt_pdf_rc4,
+    extract_pdf_text,
+    make_cid_pdf,
+    make_simple_pdf,
+    make_ucs2_pdf,
 )
+from .stage import row_stage
+
+PDF_PARSED_FIELDS = [
+    ("error", pa.string()), ("text", pa.string()),
+    ("n_pages", pa.int64()), ("n_bytes", pa.int64()),
+]
+
+
+def _pdf_rows(_, pdf):
+    n_bytes = len(pdf) if pdf is not None else 0
+    try:
+        if pdf is None:
+            raise PdfError("null payload")
+        text, n_pages = extract_pdf_text(pdf)
+    except PdfError as e:
+        return [(str(e), None, None, n_bytes)]
+    return [(None, text, n_pages, n_bytes)]
 
 
 def pdf_extract(
     df: DataFrame, id_col: str = "doc_id", pdf_col: str = "pdf"
 ) -> DataFrame:
     """pdfs(id, pdf binary) → (doc_id, error, text, n_pages, n_bytes)."""
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            pdfs = batch.column(1).to_pylist()
-            out = {"doc_id": ids, "error": [], "text": [],
-                   "n_pages": [], "n_bytes": []}
-            for p in pdfs:
-                out["n_bytes"].append(len(p) if p is not None else 0)
-                try:
-                    if p is None:
-                        raise PdfError("null payload")
-                    text, n_pages = extract_pdf_text(p)
-                except PdfError as e:
-                    out["error"].append(str(e))
-                    out["text"].append(None)
-                    out["n_pages"].append(None)
-                    continue
-                out["error"].append(None)
-                out["text"].append(text)
-                out["n_pages"].append(n_pages)
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("doc_id", pa.int64()), ("error", pa.string()),
-                    ("text", pa.string()), ("n_pages", pa.int64()),
-                    ("n_bytes", pa.int64()),
-                ]),
-            )
-
     pruned = df.select(
         F.col(id_col).cast("bigint").alias("doc_id"),
         F.col(pdf_col).alias("pdf"),
     )
-    return pruned.mapInArrow(fn, PDF_PARSED_FIELDS)
+    return row_stage(pruned, _pdf_rows, PDF_PARSED_FIELDS)
 
 
 def docs_to_pdfs(
@@ -103,67 +97,41 @@ def docs_to_pdfs(
     the unchanged oracle gates this path too. Checked BEFORE
     ``cid_every`` where residues overlap (deterministic either way)."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import hashlib
+    aes256_fid = hashlib.md5(b"aes256-corpus").digest()
 
-        from ..parser.pdf import (
-            _UCS2_CMAP_NAMES,
-            encrypt_pdf_aes,
-            encrypt_pdf_aes256,
-            encrypt_pdf_rc4,
-            make_cid_pdf,
-            make_ucs2_pdf,
-        )
-
-        aes256_fid = hashlib.md5(b"aes256-corpus").digest()
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            pdfs = []
-            for did, t in zip(ids, texts):
-                words = (t or "").split(" ")
-                lines = [
-                    " ".join(words[i : i + words_per_line])
-                    for i in range(0, len(words), words_per_line)
-                ]
-                try:
-                    if ucs2_every and did is not None \
-                            and did % ucs2_every == 2:
-                        pdf = make_ucs2_pdf(
-                            lines,
-                            _UCS2_CMAP_NAMES[(did // ucs2_every) % 4],
-                        )
-                    elif cid_every and did is not None \
-                            and did % cid_every == 1:
-                        pdf = make_cid_pdf(lines)
-                    else:
-                        pdf = make_simple_pdf(lines)
-                    if encrypt_every and did is not None \
-                            and did % encrypt_every == 0:
-                        fid = hashlib.md5(str(did).encode()).digest()
-                        cycle = (did // encrypt_every) % 3
-                        if cycle == 0:
-                            pdf = encrypt_pdf_rc4(pdf, file_id=fid)
-                        elif cycle == 1:
-                            pdf = encrypt_pdf_aes(pdf, file_id=fid)
-                        else:
-                            pdf = encrypt_pdf_aes256(
-                                pdf, file_id=aes256_fid
-                            )
-                    pdfs.append(pdf)
-                except Exception:
-                    # writer failure → null payload → pdf_extract emits
-                    # a row-level error, never a job failure
-                    pdfs.append(None)
-            yield pa.RecordBatch.from_pydict(
-                {"doc_id": ids, "pdf": pdfs},
-                schema=pa.schema(
-                    [("doc_id", pa.int64()), ("pdf", pa.binary())]
-                ),
-            )
+    def rows(did, t):
+        words = (t or "").split(" ")
+        lines = [
+            " ".join(words[i : i + words_per_line])
+            for i in range(0, len(words), words_per_line)
+        ]
+        try:
+            if ucs2_every and did is not None and did % ucs2_every == 2:
+                pdf = make_ucs2_pdf(
+                    lines, _UCS2_CMAP_NAMES[(did // ucs2_every) % 4]
+                )
+            elif cid_every and did is not None and did % cid_every == 1:
+                pdf = make_cid_pdf(lines)
+            else:
+                pdf = make_simple_pdf(lines)
+            if encrypt_every and did is not None \
+                    and did % encrypt_every == 0:
+                fid = hashlib.md5(str(did).encode()).digest()
+                cycle = (did // encrypt_every) % 3
+                if cycle == 0:
+                    pdf = encrypt_pdf_rc4(pdf, file_id=fid)
+                elif cycle == 1:
+                    pdf = encrypt_pdf_aes(pdf, file_id=fid)
+                else:
+                    pdf = encrypt_pdf_aes256(pdf, file_id=aes256_fid)
+        except Exception:
+            # writer failure → null payload → pdf_extract emits a
+            # row-level error, never a job failure
+            pdf = None
+        return [(pdf,)]
 
     pruned = docs.select(
         F.col(id_col).cast("bigint").alias("doc_id"),
         F.col(text_col).alias("text"),
     )
-    return pruned.mapInArrow(fn, "doc_id bigint, pdf binary")
+    return row_stage(pruned, rows, [("pdf", pa.binary())])

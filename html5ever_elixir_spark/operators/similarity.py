@@ -508,9 +508,9 @@ def _lloyd_rounds_local(members, seeds, iters, round6, round9):
     6dp-rounded left-fold of squared diffs (tie-break on cid),
     centroid = 9dp-rounded per-dim mean folded in sort_key order,
     empty cells drop out — so the result is bit-identical to the
-    unrolled-CTE oracle. Returns {cid: vec}."""
+    unrolled-CTE oracle. Returns {cid: vec}; no seeds → no cells."""
     cents = dict(seeds)
-    for _ in range(iters):
+    for _ in range(iters if cents else 0):
         groups: dict = {}
         clist = sorted(cents.items())
         for _, vec in members:
@@ -610,7 +610,8 @@ def ivf_assign(
         r9 = lambda x: _round_like_spark(x, 9)  # noqa: E731
         cents = _lloyd_rounds_local(rows, seeds, iters, r6, r9)
         cids = sorted(cents)
-        yield pd.DataFrame({"cid": cids, "c": [cents[c] for c in cids]})
+        if cids:  # an empty frame cannot carry the array<double> type
+            yield pd.DataFrame({"cid": cids, "c": [cents[c] for c in cids]})
 
     cents = train.coalesce(1).mapInPandas(
         lloyd_fn, "cid bigint, c array<double>"
@@ -656,7 +657,10 @@ def ann_ivf_topk(
     the probed cells. At corpus scale the candidate join is an
     equi-join on cell id (same shape as the SRP bucket join); the
     centroid table is k rows, always broadcast; the build trains on a
-    bounded hash-sample (see :func:`ivf_assign`)."""
+    bounded hash-sample (see :func:`ivf_assign`). Building the operator
+    runs an eager Spark job: the trained centroids are materialized once
+    (``localCheckpoint``) because two lineages consume them, so a
+    plan-only caller pays for the Lloyd kernel at construction."""
     assignment, cents = ivf_assign(
         emb, k_cells, iters, id_col, vec_col, train_frac, train_salt
     )
@@ -912,7 +916,9 @@ def ivf_pq_topk(
         # per-subspace Lloyd over the vec_id-ordered members
         by_j: dict = {}
         for vid, vec, _, ip in rows:
-            if not ip:
+            if not ip or not clist:
+                # no seed vector → no cells: the model (and the search
+                # result) is empty rather than a failed task
                 continue
             best = None
             for cid, c in clist:
@@ -938,9 +944,10 @@ def ivf_pq_topk(
                 o_a.append(j)
                 o_b.append(code)
                 o_w.append(cbj[code])
-        yield pd.DataFrame(
-            {"kind": o_kind, "a": o_a, "b": o_b, "w": o_w}
-        )
+        if o_kind:  # an empty frame cannot carry the array<double> type
+            yield pd.DataFrame(
+                {"kind": o_kind, "a": o_a, "b": o_b, "w": o_w}
+            )
 
     trained = train_in.coalesce(1).mapInPandas(
         fused_train_fn, "kind int, a bigint, b bigint, w array<double>"

@@ -1,12 +1,19 @@
 """Text analysis operators: language-ID, quality scoring, token
-counting, document fingerprinting. All JVM-side built-ins (codegen'd,
-row-local, zero shuffle) with DuckDB oracle mirrors.
+counting, document fingerprinting. JVM-side built-ins (codegen'd,
+row-local, zero shuffle) with DuckDB oracle mirrors; the two passes Spark
+SQL cannot express (NFC normalization, mojibake repair) are row
+functions on the shared row stage (``operators/stage.py``).
 """
 
 from __future__ import annotations
 
+import unicodedata
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .stage import row_stage
 
 # small deterministic stopword marker lists (heuristic language-ID)
 LANG_MARKERS = {
@@ -664,57 +671,29 @@ def nfc_normalize_docs(
     text arrives from the crawl as both 'é' and 'e'+COMBINING ACUTE;
     unnormalized, exact dedup misses them and tokenizers fragment).
 
-    Runs via ``mapInArrow`` (Spark SQL has no unicode-normalize
-    builtin): batch-wise Python ``unicodedata.normalize`` — vectorized
-    Arrow transfer, no per-row UDF; 2-column pruned input; row-local,
-    zero shuffle, embarrassingly parallel at any scale. The DuckDB
-    oracle uses utf8proc's independent ``nfc_normalize`` — a
-    differential gate, not a mirror of our own code.
+    Runs as a row function on the shared row stage (Spark SQL has no
+    unicode-normalize builtin): Python ``unicodedata.normalize`` per
+    row inside one ``mapInArrow`` batch loop — vectorized Arrow
+    transfer, no per-row UDF; 2-column pruned input; row-local, zero
+    shuffle, embarrassingly parallel at any scale. The DuckDB oracle
+    uses utf8proc's independent ``nfc_normalize`` — a differential
+    gate, not a mirror of our own code.
     Output (doc_id, text_nfc, changed, n_chars_before, n_chars_after).
     """
-    from typing import Iterator
-
-    import pyarrow as pa
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import unicodedata
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out = {"doc_id": ids, "text_nfc": [], "changed": [],
-                   "n_chars_before": [], "n_chars_after": []}
-            for t in texts:
-                if t is None:
-                    out["text_nfc"].append(None)
-                    out["changed"].append(None)
-                    out["n_chars_before"].append(None)
-                    out["n_chars_after"].append(None)
-                    continue
-                norm = unicodedata.normalize("NFC", t)
-                out["text_nfc"].append(norm)
-                out["changed"].append(norm != t)
-                out["n_chars_before"].append(len(t))
-                out["n_chars_after"].append(len(norm))
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("doc_id", pa.int64()), ("text_nfc", pa.string()),
-                    ("changed", pa.bool_()),
-                    ("n_chars_before", pa.int64()),
-                    ("n_chars_after", pa.int64()),
-                ]),
-            )
+    def rows(_, t):
+        if t is None:
+            return [(None, None, None, None)]
+        norm = unicodedata.normalize("NFC", t)
+        return [(norm, norm != t, len(t), len(norm))]
 
     pruned = docs.select(
         F.col(id_col).cast("bigint").alias("doc_id"),
         F.col(text_col).alias("text"),
     )
-    return pruned.mapInArrow(
-        fn,
-        "doc_id bigint, text_nfc string, changed boolean, "
-        "n_chars_before bigint, n_chars_after bigint",
-    )
+    return row_stage(pruned, rows, [
+        ("text_nfc", pa.string()), ("changed", pa.bool_()),
+        ("n_chars_before", pa.int64()), ("n_chars_after", pa.int64()),
+    ])
 
 
 def oracle_nfc_sql(table: str = "documents", text_expr: str = "text") -> str:
@@ -976,7 +955,11 @@ def lm_buckets(
        tiny aggregates, broadcast back;
     4. bucket from rank by the exact ntile rule (the first n mod b
        buckets get ⌈n/b⌉ rows, the rest ⌊n/b⌋) — all integer
-       arithmetic, so it matches DuckDB's ntile bit-for-bit."""
+       arithmetic, so it matches DuckDB's ntile bit-for-bit.
+
+    With ``materialize=True`` (default) building the operator runs an
+    eager Spark job (the scored, ranked rows are checkpointed once);
+    ``materialize=False`` keeps plan building lazy."""
     from pyspark.sql import Window
 
     scored = lm_score(docs, ref, text_col, id_col)
@@ -1427,29 +1410,13 @@ def fix_mojibake(
     max_passes: int = 3,
 ) -> DataFrame:
     """docs → (id, text_fixed, n_passes bigint): row-local mojibake
-    repair in Arrow batches — zero shuffle, embarrassingly parallel;
-    at 100 TB this rides the same scan as the other row-local text
-    gates. ``n_passes`` = how many decode layers were peeled (0 =
-    clean; 2 = the doubly-encoded case)."""
-    import pyarrow as pa
-
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            fixed, np_ = [], []
-            for t in texts:
-                f, n = fix_mojibake_text(t or "", max_passes)
-                fixed.append(f)
-                np_.append(n)
-            yield pa.RecordBatch.from_pydict(
-                {id_col: ids, "text_fixed": fixed, "n_passes": np_},
-                schema=pa.schema([
-                    (id_col, pa.int64()), ("text_fixed", pa.string()),
-                    ("n_passes", pa.int64()),
-                ]),
-            )
-
-    return docs.select(id_col, text_col).mapInArrow(
-        fn, f"{id_col} bigint, text_fixed string, n_passes bigint"
+    repair, a row function on the shared row stage — zero shuffle,
+    embarrassingly parallel; at 100 TB this rides the same scan as the
+    other row-local text gates. The id column keeps its own type; NULL
+    text repairs as ``""``. ``n_passes`` = how many decode layers were
+    peeled (0 = clean; 2 = the doubly-encoded case)."""
+    return row_stage(
+        docs.select(id_col, text_col),
+        lambda _, t: [fix_mojibake_text(t or "", max_passes)],
+        [("text_fixed", pa.string()), ("n_passes", pa.int64())],
     )

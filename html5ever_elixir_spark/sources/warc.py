@@ -5,10 +5,12 @@ per-record gzip members). The reference repo has no container layer
 style pages" source surface.
 
 Reader design for 100 TB: a WARC file is a *byte stream* of records —
-one `mapInArrow` call per Arrow batch of (warc_id, content) blobs,
-each blob walked iteratively record-by-record (no regex over the whole
-payload, no recursion); malformed records become row-level error rows,
-never job failures — the same error contract as the HTML/PDF parsers.
+each blob is walked iteratively record-by-record (no regex over the
+whole payload, no recursion) by a row function on the shared row stage
+(``operators/stage.py``: one ``mapInArrow`` call per Arrow batch of
+(warc_id, content) blobs, size-flushed output batches); malformed
+records become row-level error rows, never job failures — the same
+error contract as the HTML/PDF parsers.
 Per-record gzip members (the Common Crawl layout) are detected by the
 gzip magic and inflated one member at a time via ``zlib``'s
 ``unused_data`` chaining.
@@ -25,12 +27,22 @@ from __future__ import annotations
 import zlib
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-PAGES_FIELDS = (
-    "url string, warc_ts string, html binary, warc_id bigint, "
-    "http_status int, error string"
-)
+from ..operators.stage import row_stage
+
+# row fields of the record walks; the blob id column sits between them
+# in the output (after ``html``/``text``)
+PAGES_FIELDS = [
+    ("url", pa.string()), ("warc_ts", pa.string()), ("html", pa.binary()),
+    ("http_status", pa.int32()), ("error", pa.string()),
+]
+WET_FIELDS = [
+    ("url", pa.string()), ("warc_ts", pa.string()), ("text", pa.string()),
+    ("error", pa.string()),
+]
 
 
 class WarcError(ValueError):
@@ -442,7 +454,10 @@ def warc_to_pages(
     entity gzip) yields a PER-RECORD error row carrying its url;
     request/warcinfo records are skipped silently. ``http_status`` is
     the parsed status-line code (real crawls carry 3xx/4xx/5xx bodies
-    a curation pipeline filters on — downstream keeps 200s). mapInArrow: binary end-to-end, 2-column pruned input.
+    a curation pipeline filters on — downstream keeps 200s). The walk
+    is a row function on the shared row stage: binary end-to-end,
+    2-column pruned input, output flushed by size (a GiB blob yields
+    many bounded batches, ~O(one record) worker memory).
 
     ``spread=True`` (default, r9) round-robin-repartitions the blob
     frame to 2×defaultParallelism before the walk: a blob is the unit
@@ -456,11 +471,6 @@ def warc_to_pages(
     SPARK-23207) and gives one-blob task granularity. Pass
     ``spread=False`` for sources that are already one-blob-per-split
     (real WARC file scans at corpus scale) or for streaming frames."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    fn = _records_fn()
-
     pruned = df.select(
         F.col(id_col).cast("bigint").alias("warc_id"),
         F.col(content_col).alias("content"),
@@ -468,68 +478,24 @@ def warc_to_pages(
     if spread:
         n = df.sparkSession.sparkContext.defaultParallelism * 2
         pruned = pruned.repartition(n)
-    return pruned.mapInArrow(fn, PAGES_FIELDS)
+    return row_stage(pruned, _warc_rows, PAGES_FIELDS).select(
+        "url", "warc_ts", "html", "warc_id", "http_status", "error"
+    )
 
 
-def _records_fn(flush_bytes: int = 64 * 1024 * 1024, flush_rows: int = 4096):
-    """Build the mapInArrow record-walk function (module-level so tests
-    can drive it Spark-free and shrink the flush thresholds)."""
-    import pyarrow as pa
-
-    schema = pa.schema([
-        ("url", pa.string()), ("warc_ts", pa.string()),
-        ("html", pa.binary()), ("warc_id", pa.int64()),
-        ("http_status", pa.int32()), ("error", pa.string()),
-    ])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # output is flushed by SIZE, not per input batch: a single GiB
-        # blob yields many bounded RecordBatches instead of one giant
-        # pydict of every record in the blob — paired with the rolling
-        # record walk this keeps worker memory ~O(one record), not
-        # O(inflated blob)
-        out = {"url": [], "warc_ts": [], "html": [], "warc_id": [],
-               "http_status": [], "error": []}
-        held = 0
-
-        def flush():
-            nonlocal out, held
-            batch = pa.RecordBatch.from_pydict(out, schema=schema)
-            out = {"url": [], "warc_ts": [], "html": [], "warc_id": [],
-                   "http_status": [], "error": []}
-            held = 0
-            return batch
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            del batch
-            for wid, blob in zip(ids, blobs):
-                try:
-                    if blob is None:
-                        raise WarcError("null payload")
-                    for rec in parse_warc_records(blob):
-                        out["url"].append(rec["url"])
-                        out["warc_ts"].append(rec["date"])
-                        out["html"].append(rec["html"])
-                        out["warc_id"].append(wid)
-                        out["http_status"].append(rec.get("status"))
-                        # per-record errors (bad content-encoding etc.)
-                        # carry their url, unlike blob-level errors
-                        out["error"].append(rec.get("error"))
-                        held += len(rec["html"] or b"") + 64
-                        if held >= flush_bytes or len(out["url"]) >= flush_rows:
-                            yield flush()
-                except WarcError as e:
-                    out["url"].append(None)
-                    out["warc_ts"].append(None)
-                    out["html"].append(None)
-                    out["warc_id"].append(wid)
-                    out["http_status"].append(None)
-                    out["error"].append(str(e))
-        yield flush()
-
-    return fn
+def _warc_rows(_, blob):
+    """One WARC blob → :data:`PAGES_FIELDS` rows, one per response
+    record. Per-record errors (bad content-encoding etc.) carry their
+    url; a structurally broken blob ends with one error row that
+    carries only the blob id."""
+    try:
+        if blob is None:
+            raise WarcError("null payload")
+        for rec in parse_warc_records(blob):
+            yield (rec["url"], rec["date"], rec["html"], rec.get("status"),
+                   rec.get("error"))
+    except WarcError as e:
+        yield None, None, None, None, str(e)
 
 
 def wet_to_text(
@@ -538,50 +504,28 @@ def wet_to_text(
     """(wet_id, content binary) → one row per WET conversion record
     (url, warc_ts string, text string, wet_id, error). The read-side
     of the extraction interchange format :func:`make_wet` writes; the
-    same rolling record walk as :func:`warc_to_pages` (O(one record)
-    memory at GiB blob scale), a broken blob yields ONE error row
-    carrying its wet_id. Response records inside a mixed blob are
-    skipped (this reader wants extracted text, not raw captures)."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    schema = pa.schema([
-        ("url", pa.string()), ("warc_ts", pa.string()),
-        ("text", pa.string()), ("wet_id", pa.int64()),
-        ("error", pa.string()),
-    ])
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            out = {"url": [], "warc_ts": [], "text": [], "wet_id": [],
-                   "error": []}
-            for wid, blob in zip(ids, blobs):
-                try:
-                    if blob is None:
-                        raise WarcError("null payload")
-                    for rec in parse_warc_records(blob, conversion=True):
-                        if "text" not in rec:
-                            continue  # response records: not our format
-                        out["url"].append(rec["url"])
-                        out["warc_ts"].append(rec["date"])
-                        out["text"].append(rec["text"])
-                        out["wet_id"].append(wid)
-                        out["error"].append(None)
-                except WarcError as e:
-                    out["url"].append(None)
-                    out["warc_ts"].append(None)
-                    out["text"].append(None)
-                    out["wet_id"].append(wid)
-                    out["error"].append(str(e))
-            yield pa.RecordBatch.from_pydict(out, schema=schema)
-
+    same rolling record walk and size-flushed output as
+    :func:`warc_to_pages` (O(one record) memory at GiB blob scale), a
+    broken blob yields ONE error row carrying its wet_id. Response
+    records inside a mixed blob are skipped (this reader wants
+    extracted text, not raw captures)."""
     pruned = df.select(
         F.col(id_col).cast("bigint").alias("wet_id"),
         F.col(content_col).alias("content"),
     )
-    return pruned.mapInArrow(
-        fn, "url string, warc_ts string, text string, wet_id bigint, "
-        "error string"
+    return row_stage(pruned, _wet_rows, WET_FIELDS).select(
+        "url", "warc_ts", "text", "wet_id", "error"
     )
+
+
+def _wet_rows(_, blob):
+    """One WET blob → :data:`WET_FIELDS` rows, one per conversion
+    record; a broken blob ends with one error row."""
+    try:
+        if blob is None:
+            raise WarcError("null payload")
+        for rec in parse_warc_records(blob, conversion=True):
+            if "text" in rec:  # response records: not our format
+                yield rec["url"], rec["date"], rec["text"], None
+    except WarcError as e:
+        yield None, None, None, str(e)

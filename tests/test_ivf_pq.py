@@ -6,6 +6,7 @@ import duckdb
 import pytest
 
 from html5ever_elixir_spark.operators.similarity import (
+    ann_ivf_topk,
     cosine_topk,
     ivf_pq_topk,
     oracle_ivf_pq_sql,
@@ -109,3 +110,19 @@ def test_dim_not_divisible_raises(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     with pytest.raises(ValueError):
         ivf_pq_topk(emb, m=5, dim=64)
+
+
+def test_no_seed_vector_yields_empty_result(spark):
+    # no vec_id < k_cells exists, so the coarse model has no seed and
+    # no cell: the PQ-gated rows have nothing to be assigned to. The
+    # trained model and the search result are empty; the job must not
+    # fail
+    rows = [
+        (1000 + i, [float((i * 7 + d * 3) % 11) for d in range(8)])
+        for i in range(40)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    out = ivf_pq_topk(emb, k_cells=4, k_pq=4, m=2, dim=8)
+    assert out.collect() == []
+    # the coarse-only IVF search shares the Lloyd kernel
+    assert ann_ivf_topk(emb, k_cells=4).collect() == []

@@ -1084,27 +1084,36 @@ def test_warc_big_blob_bounded_memory():
     assert peak < 64 * 1024 * 1024, f"peak {peak/1e6:.0f} MB"
 
 
-def test_warc_to_pages_output_batches_are_size_flushed():
+@pytest.mark.parametrize("kind", ["warc", "wet"])
+def test_warc_to_pages_output_batches_are_size_flushed(monkeypatch, kind):
     # one blob with more records than the flush threshold must yield
     # MULTIPLE output RecordBatches (Arrow output is size-bounded, not
-    # per-blob) — Spark-free drive of the mapInArrow fn
+    # per-blob) — Spark-free drive of the shared row stage's batch loop
+    # over the WARC (warc_to_pages) and WET (wet_to_text) record walks
     import pyarrow as pa
 
-    from html5ever_elixir_spark.sources.warc import _records_fn, make_warc
+    from html5ever_elixir_spark.operators import stage
+    from html5ever_elixir_spark.sources import warc
 
+    monkeypatch.setattr(stage, "FLUSH_ROWS", 100)
     recs = [(f"https://f.example/p{i}", "2024-01-01T00:00:00Z",
-             b"<p>x</p>") for i in range(250)]
-    blob = make_warc(recs)
+             "<p>x</p>") for i in range(250)]
+    if kind == "warc":
+        blob = warc.make_warc([(u, d, t.encode()) for u, d, t in recs])
+        fn, fields = warc._warc_rows, warc.PAGES_FIELDS
+    else:
+        blob = warc.make_wet(recs)
+        fn, fields = warc._wet_rows, warc.WET_FIELDS
     batch = pa.RecordBatch.from_pydict(
-        {"warc_id": [1], "content": [blob]},
-        schema=pa.schema([("warc_id", pa.int64()),
+        {"blob_id": [1], "content": [blob]},
+        schema=pa.schema([("blob_id", pa.int64()),
                           ("content", pa.binary())]),
     )
-    out = list(_records_fn(flush_rows=100)(iter([batch])))
+    out = list(stage.row_batches(iter([batch]), fn, fields))
     assert len(out) >= 3  # 250 records / 100-row flush
     assert sum(b.num_rows for b in out) == 250
     assert all(b.num_rows <= 100 for b in out)
-    urls = [u for b in out for u in b.column(0).to_pylist()]
+    urls = [u for b in out for u in b.column("url").to_pylist()]
     assert urls == [r[0] for r in recs]
 
 
