@@ -412,11 +412,15 @@ def docs_to_gifs(
     bytes are the character codes. Odd doc_ids get bare GIF87a; even
     ones GIF89a with graphic-control + comment extension blocks, so the
     driver row exercises both version paths and the extension skip.
-    A row function on the shared row stage, 2-column pruned, binary
-    out."""
+    A NULL, empty or over-65535-byte text has no 1-row GIF and gets a
+    NULL payload (the decoders' "null payload" row), never a failed
+    task. A row function on the shared row stage, 2-column pruned,
+    binary out."""
 
     def rows(did, t):
         px = (t or "").encode("utf-8")
+        if not 0 < len(px) <= 0xFFFF:
+            return [(None,)]  # no 1×0 or >uint16-wide GIF
         if did % 2 == 0:
             return [(encode_gif(px, len(px), 1, b"89a", _GIF_EXTS),)]
         return [(encode_gif(px, len(px), 1, b"87a"),)]
@@ -433,11 +437,15 @@ def docs_to_webps(
     WebP whose decoded BT.601 luma equals the character code exactly
     (r=g=b=v → (299+587+114)/1000 = 1). Even doc_ids route through the
     subtract-green transform (§5.2) so the driver row exercises both
-    the plain-literal and transform-inverse paths. A row function on
-    the shared row stage, 2-column pruned, binary out."""
+    the plain-literal and transform-inverse paths. A NULL, empty or
+    over-16384-byte text has no 1-row VP8L image and gets a NULL
+    payload, never a failed task. A row function on the shared row
+    stage, 2-column pruned, binary out."""
 
     def rows(did, t):
         px = (t or "").encode("utf-8")
+        if not 0 < len(px) <= 1 << 14:
+            return [(None,)]  # no 1×0 or >14-bit-wide VP8L
         return [(encode_webp_vp8l(px, len(px), 1,
                                   subtract_green=(did % 2 == 0)),)]
 

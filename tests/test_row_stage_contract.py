@@ -98,26 +98,35 @@ CASES = {
             (3, _bin(628, "c000dfe1132c065cf5f28bb1ff5d88cd")),
         ],
     ),
-    # an empty text has no 1×0 GIF/WebP encoding, so these two writers
-    # get non-empty texts only (odd and even ids take different paths)
+    # odd and even ids take different paths; a NULL, empty or too-wide
+    # text (no 1-row image: GIF widths are uint16, VP8L 14-bit) is a
+    # NULL payload, not a failed task
     "docs_to_gifs": (
         docs_to_gifs,
         ("doc_id bigint, text string", [(1, "hello wide world"),
-                                        (4, "café 中")]),
+                                        (4, "café 中"), (5, None),
+                                        (6, ""), (7, "x" * 65536)]),
         "struct<media_id:bigint,payload:binary>",
         [
             (1, _bin(815, "e89a2f36af500283c708eac17fc2b585")),
             (4, _bin(823, "74107409b0bc6028888f66139e41ffb9")),
+            (5, _N),
+            (6, _N),
+            (7, _N),
         ],
     ),
     "docs_to_webps": (
         docs_to_webps,
         ("doc_id bigint, text string", [(1, "hello wide world"),
-                                        (4, "café 中")]),
+                                        (4, "café 中"), (5, None),
+                                        (6, ""), (7, "x" * 16385)]),
         "struct<media_id:bigint,payload:binary>",
         [
             (1, _bin(160, "dd2a529a7f7270753b9a7dd32b4fa07c")),
             (4, _bin(70, "4345027b532c578ff2b2e949225d0bf4")),
+            (5, _N),
+            (6, _N),
+            (7, _N),
         ],
     ),
     "docs_to_wavs": (
